@@ -48,6 +48,13 @@ def test_python_crossings_are_arrow_and_allowlisted(plans):
     assert crossing <= ARROW_ALLOWED, f"unexpected Python crossing: {crossing - ARROW_ALLOWED}"
 
 
+def test_multimodal_meta_is_one_crossing(plans):
+    """Every codec stage of ns_multimodal_meta synthesizes and decodes
+    inside ONE Arrow crossing: each Python task pays a fixed CPU cost
+    whatever its row count, so a crossing per stage multiplies it."""
+    assert plans["ns_multimodal_meta"].count("MapInPandas") == 1
+
+
 def test_dim_joins_broadcast_not_sortmerge(plans):
     """TPC-H-shaped dim joins must stay broadcast (no SortMergeJoin)."""
     for name in ("tpch_q3_shipping_priority", "tpch_q5_nation_revenue"):
@@ -235,11 +242,8 @@ SHUFFLE_BUDGET = {
     # 3; the r5 leakage stage adds the url-group window + the
     # per-group distinct-label aggs and per-split counts
     "ns_split_train_val": 8,
-    # family: multimodal — one metadata agg per codec stage
-    # (stub/png/wav + jpeg since r4)
-    # r10: +1 — the avi container stage's groupBy(format)
-    # one groupBy(format) per codec stage (r11: +1 for avi_mjpg)
-    "ns_multimodal_meta": 7,
+    # family: multimodal — one groupBy(stage, format) over all stages
+    "ns_multimodal_meta": 1,
     # family: approx aggs — separate agg branches + sketch rollup.
     # r6: +4 in the FINAL plan for the Count-Min stages (per-path
     # probe-estimate and exact-count groupBys; probe/exact/total sides

@@ -614,19 +614,6 @@ def _stacked_tables(kind: str):
     return (np.stack([lu[0], ch[0]]), np.stack([lu[1], ch[1]]))
 
 
-def encode_jpeg_frames(width: int, height: int, frames: list[bytes],
-                       quality: int = 85) -> list[bytes]:
-    """Batch grayscale encoder for same-dimension frame sequences (the
-    MJPEG synthesis path): ONE numpy pass runs the FDCT+quantize and
-    the array-at-once entropy encode across every block of every
-    frame (per-frame DC chains and byte padding preserved — each
-    returned element is byte-identical to ``encode_jpeg(width,
-    height, frame, quality)``; parity pinned in tests). The marker
-    header is dimension/quality-derived and shared."""
-    return encode_jpeg_frames_many([(width, height, frames)],
-                                   quality=quality)[0]
-
-
 def _clip_zigzag_blocks(width: int, height: int, frames: list[bytes],
                         quality: int) -> np.ndarray:
     """(nf·blocks, 64) zigzag coefficients for a same-dim grayscale

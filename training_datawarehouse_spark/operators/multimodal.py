@@ -287,6 +287,7 @@ MEDIA_META_SCHEMA = T.StructType([
     T.StructField("height", T.IntegerType()),
     T.StructField("checksum", T.StringType()),
 ])
+_META_COLS = MEDIA_META_SCHEMA.fieldNames()[1:]  # all but "id"
 
 
 def attach_binary_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -332,31 +333,53 @@ def _md5_dims(text: str) -> tuple[int, int, bytes]:
     return 16 + digest[0] % 16, 16 + digest[1] % 16, digest
 
 
-def synthesize_png_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Source stand-in producing REAL image bytes: a valid PNG per row
-    (dims md5-derived, pixels the tiled digest, scanline filter chosen
-    per-row so all five filter paths run), in place of reading image
-    files from a store. Arrow-batched ``mapInPandas``; output is
-    (id, payload) like ``attach_binary_payload``."""
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
+PAYLOAD_SCHEMA = T.StructType([
+    T.StructField("id", T.LongType()),
+    T.StructField("payload", T.BinaryType()),
+])
+
+
+def map_payloads(df: DataFrame, id_col: str, text_col: str,
+                 build: Callable[[list], list]) -> DataFrame:
+    """(id, text) → (id, payload) through one Arrow crossing: ``build``
+    maps each batch's texts to one payload apiece. The shape every
+    ``synthesize_*_payload`` source stand-in shares."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                w, h, digest = _md5_dims(text)
-                n = w * h
-                pixels = (digest * (n // len(digest) + 1))[:n]
-                payloads.append(encode_png(w, h, pixels,
-                                           filter_type=digest[2] % 5))
             yield pd.DataFrame({
-                "id": pdf[id_col].to_numpy(), "payload": payloads,
+                "id": pdf[id_col].to_numpy(),
+                "payload": build(list(pdf[text_col])),
             })
 
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+    return df.select(id_col, text_col).mapInPandas(gen, PAYLOAD_SCHEMA)
+
+
+def stub_payloads(texts: list) -> list[bytes]:
+    """Opaque 16-byte payloads: the md5 digest of each text — the same
+    bytes ``attach_binary_payload`` derives in SQL as
+    ``unhex(md5(text))``."""
+    return [hashlib.md5(t.encode("utf-8")).digest() for t in texts]
+
+
+def png_payloads(texts: list) -> list[bytes]:
+    """A valid PNG per text: dims md5-derived, pixels the tiled digest,
+    scanline filter chosen per text so all five filter paths run."""
+    out = []
+    for text in texts:
+        w, h, digest = _md5_dims(text)
+        n = w * h
+        pixels = (digest * (n // len(digest) + 1))[:n]
+        out.append(encode_png(w, h, pixels, filter_type=digest[2] % 5))
+    return out
+
+
+def synthesize_png_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Source stand-in producing REAL image bytes (``png_payloads``) in
+    place of reading image files from a store. Arrow-batched
+    ``mapInPandas``; output is (id, payload) like
+    ``attach_binary_payload``."""
+    return map_payloads(df, id_col, text_col, png_payloads)
 
 
 def png_decode_meta(payload: bytes) -> dict:
@@ -376,94 +399,74 @@ def png_decode_meta(payload: bytes) -> dict:
     }
 
 
+def wav_payloads(texts: list) -> list[bytes]:
+    """A 16-bit PCM WAV per text: framerate/frame-count md5-derived,
+    samples from the tiled digest."""
+    out = []
+    for text in texts:
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        framerate = 8000 + (digest[2] % 8) * 1000
+        n_frames = 256 + digest[3]
+        raw = (digest * (2 * n_frames // len(digest) + 1))[: 2 * n_frames]
+        samples = list(struct.unpack(f"<{n_frames}h", raw))
+        out.append(encode_wav(samples, framerate))
+    return out
+
+
 def synthesize_wav_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Source stand-in producing REAL audio bytes: a 16-bit PCM WAV per
-    row (framerate/frame-count md5-derived, samples from the tiled
-    digest)."""
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
+    """Source stand-in producing REAL audio bytes (``wav_payloads``)."""
+    return map_payloads(df, id_col, text_col, wav_payloads)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                framerate = 8000 + (digest[2] % 8) * 1000
-                n_frames = 256 + digest[3]
-                raw = (digest * (2 * n_frames // len(digest) + 1))[: 2 * n_frames]
-                samples = list(struct.unpack(f"<{n_frames}h", raw))
-                payloads.append(encode_wav(samples, framerate))
-            yield pd.DataFrame({
-                "id": pdf[id_col].to_numpy(), "payload": payloads,
-            })
 
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+def jpeg_payloads(texts: list) -> list[bytes]:
+    """A valid baseline JFIF per text: dims md5-derived exactly like the
+    PNG twin, pixels the tiled digest, alternating grayscale /
+    YCbCr-4:2:0 layout per text so both MCU paths run. Every image
+    rides one entropy-encode numpy pass (byte-identical to per-image
+    ``encode_jpeg``)."""
+    from . import jpeg
+
+    items = []
+    for text in texts:
+        w, h, digest = _md5_dims(text)
+        n = w * h
+        pixels = (digest * (n // len(digest) + 1))[:n]
+        items.append((w, h, pixels, bool(digest[3] % 2)))
+    return jpeg.encode_jpeg_batch(items, quality=85)
 
 
 def synthesize_jpeg_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Source stand-in producing REAL JPEG bytes: a valid baseline JFIF
-    per row (dims md5-derived exactly like the PNG twin, pixels the
-    tiled digest, alternating grayscale / YCbCr-4:2:0 layout per row so
-    both MCU paths run)."""
-    from . import jpeg
+    """Source stand-in producing REAL JPEG bytes (``jpeg_payloads``)."""
+    return map_payloads(df, id_col, text_col, jpeg_payloads)
 
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            items = []
-            for text in pdf[text_col]:
-                w, h, digest = _md5_dims(text)
-                n = w * h
-                pixels = (digest * (n // len(digest) + 1))[:n]
-                items.append((w, h, pixels, bool(digest[3] % 2)))
-            # r17: every image in the Arrow batch rides one entropy-
-            # encode numpy pass (byte-identical to per-row encode_jpeg)
-            payloads = jpeg.encode_jpeg_batch(items, quality=85)
-            yield pd.DataFrame({
-                "id": pdf[id_col].to_numpy(), "payload": payloads,
-            })
+def webp_payloads(texts: list) -> list[bytes]:
+    """A valid RIFF/VP8L (WebP-lossless) file per text: dims
+    md5-derived exactly like the PNG/JPEG twins, RGBA pixels the tiled
+    digest, with the encoder's option mix — subtract-green transform,
+    predictor transform mode, color cache — chosen per text from digest
+    bytes so every decoder path (canonical prefix codes, both
+    transforms, cache hits) runs across a corpus."""
+    from . import vp8l
 
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+    out = []
+    for text in texts:
+        w, h, digest = _md5_dims(text)
+        n = w * h * 4
+        rgba = (digest * (n // len(digest) + 1))[:n]
+        out.append(vp8l.encode_vp8l(
+            w, h, rgba,
+            subtract_green=bool(digest[4] % 2),
+            predictor_mode=[None, 1, 2, 7][digest[5] % 4],
+            cache_bits=[0, 6][digest[6] % 2],
+        ))
+    return out
 
 
 def synthesize_webp_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Source stand-in producing REAL WebP-lossless bytes: a valid
-    RIFF/VP8L file per row (dims md5-derived exactly like the PNG/JPEG
-    twins, RGBA pixels the tiled digest), with the encoder's option mix
-    — subtract-green transform, predictor transform mode, color cache —
-    chosen per row from digest bytes so every decoder path (canonical
-    prefix codes, both transforms, cache hits) runs across a corpus."""
-    from . import vp8l
-
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                w, h, digest = _md5_dims(text)
-                n = w * h * 4
-                rgba = (digest * (n // len(digest) + 1))[:n]
-                payloads.append(vp8l.encode_vp8l(
-                    w, h, rgba,
-                    subtract_green=bool(digest[4] % 2),
-                    predictor_mode=[None, 1, 2, 7][digest[5] % 4],
-                    cache_bits=[0, 6][digest[6] % 2],
-                ))
-            yield pd.DataFrame({
-                "id": pdf[id_col].to_numpy(), "payload": payloads,
-            })
-
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+    """Source stand-in producing REAL WebP-lossless bytes
+    (``webp_payloads``)."""
+    return map_payloads(df, id_col, text_col, webp_payloads)
 
 
 def webp_decode_meta(payload: bytes) -> dict:
@@ -544,6 +547,26 @@ def wav_decode_meta(payload: bytes) -> dict:
     }
 
 
+def decode_payloads(
+    payloads: list,
+    decode_fn: Callable[[bytes], dict] = deterministic_fake_decode,
+) -> list[dict]:
+    """One Arrow batch's payloads → one metadata dict apiece.
+
+    A decode_fn may expose a ``batch`` twin (same per-payload results
+    and error classes) that decodes the whole batch array-at-once — the
+    lane-stepped JPEG decoder rides this seam. Engaged only at >=
+    _BATCH_DECODE_MIN payloads: the lane decoder's per-step vector
+    costs amortize with batch width (measured: ~break-even at 312
+    lanes, 1.6x at 5000), so small bench-scale batches keep the scalar
+    path and production-width Arrow batches (10k rows) get the
+    vectorized one."""
+    batch_fn = getattr(decode_fn, "batch", None)
+    if batch_fn is not None and len(payloads) >= _BATCH_DECODE_MIN:
+        return batch_fn(payloads)
+    return [decode_fn(p) for p in payloads]
+
+
 def decode_metadata(
     df: DataFrame,
     decode_fn: Callable[[bytes], dict] = deterministic_fake_decode,
@@ -555,27 +578,48 @@ def decode_metadata(
     output — downstream aggregations never shuffle payload bytes.
     """
 
-    # r17: a decode_fn may expose a ``batch`` twin (same per-payload
-    # results and error classes) that decodes the whole Arrow batch
-    # array-at-once — the lane-stepped JPEG decoder rides this seam.
-    # Engaged only at >= _BATCH_DECODE_MIN payloads: the lane
-    # decoder's per-step vector costs amortize with batch width
-    # (measured: ~break-even at 312 lanes, 1.6x at 5000), so small
-    # bench-scale batches keep the scalar path and production-width
-    # Arrow batches (10k rows) get the vectorized one.
-    batch_fn = getattr(decode_fn, "batch", None)
-
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if batch_fn is not None and len(pdf) >= _BATCH_DECODE_MIN:
-                metas = batch_fn(list(pdf["payload"]))
-            else:
-                metas = [decode_fn(p) for p in pdf["payload"]]
-            out = pd.DataFrame(metas)
+            out = pd.DataFrame(decode_payloads(list(pdf["payload"]), decode_fn),
+                               columns=_META_COLS)
             out.insert(0, "id", pdf["id"].to_numpy())
-            yield out[["id", "n_bytes", "format", "width", "height", "checksum"]]
+            yield out
 
     return df.select("id", "payload").mapInPandas(decode_batches, MEDIA_META_SCHEMA)
+
+
+STAGE_META_SCHEMA = T.StructType(
+    [T.StructField("stage", T.StringType())] + MEDIA_META_SCHEMA.fields
+)
+
+
+def synthesize_decode_stages(
+    df: DataFrame, id_col: str, text_col: str,
+    stages: dict[str, tuple[Callable[[list], list], Callable[[bytes], dict]]],
+) -> DataFrame:
+    """Every codec stage in ONE Arrow crossing: (id, text) →
+    STAGE_META_SCHEMA rows, one per (stage, input row).
+
+    ``stages`` maps a stage name to ``(build, decode_fn)``: ``build``
+    turns a batch's texts into payloads (``png_payloads`` …) and
+    ``decode_fn`` reads each back (``png_decode_meta`` …). Per Arrow
+    batch, each stage synthesizes and decodes inside the worker, so its
+    rows equal ``decode_metadata(map_payloads(df, …, build),
+    decode_fn)`` while paying the Python task cost once for all stages
+    — and payload bytes never cross back to the JVM."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            texts = list(pdf[text_col])
+            ids = pdf[id_col].to_numpy()
+            for stage, (build, decode_fn) in stages.items():
+                out = pd.DataFrame(decode_payloads(build(texts), decode_fn),
+                                   columns=_META_COLS)
+                out.insert(0, "id", ids)
+                out.insert(0, "stage", stage)
+                yield out
+
+    return df.select(id_col, text_col).mapInPandas(run, STAGE_META_SCHEMA)
 
 
 RESIZED_SCHEMA = T.StructType([

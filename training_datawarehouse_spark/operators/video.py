@@ -57,6 +57,7 @@ pattern a real frame sampler needs.
 """
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
 from typing import Iterator
@@ -68,6 +69,7 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 from ..functions.caching import release_local_checkpoint
 from . import phash as ph
 from .jpeg import decode_jpeg, encode_jpeg, encode_jpeg_frames_many
+from .multimodal import map_payloads
 
 N_FRAMES = 4           # frames per synthesized fingerprint clip
 DEFAULT_FPS = 8
@@ -490,51 +492,41 @@ def video_pair_matches(
 
 # ------------------------------------------------- metadata payloads
 
+def avi_payloads(texts: list, codec: str = "DIB ") -> list[bytes]:
+    """A valid AVI per text with md5-derived dims (16–31 px a side, the
+    PNG-stage rule), an md5-derived frame count 2–8, fps 4–11, and
+    digest-striped frame pixels (frame f shifts the stripe by f so
+    frames differ). The variable frame count + non-4-multiple widths
+    exercise the idx1 walk and the DIB stride padding."""
+    clips = []
+    for text in texts:
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        w, h = 16 + digest[0] % 16, 16 + digest[1] % 16
+        nf = 2 + digest[2] % 7
+        fps = 4 + digest[3] % 8
+        n = w * h
+        frames = []
+        for f in range(nf):
+            stripe = digest[f % 16:] + digest[:f % 16]
+            frames.append((stripe * (n // 16 + 1))[:n])
+        clips.append((w, h, frames, fps))
+    if codec == "MJPG":
+        # r17: one vectorized entropy pass encodes every frame of every
+        # clip (byte-identical to per-frame encode_jpeg — §4.2
+        # batch-at-once)
+        encs = encode_jpeg_frames_many(
+            [(w, h, frames) for w, h, frames, _fps in clips])
+        return [encode_avi(enc, w, h, fps, codec="MJPG")
+                for (w, h, _frames, fps), enc in zip(clips, encs)]
+    return [encode_avi(frames, w, h, fps) for w, h, frames, fps in clips]
+
+
 def synthesize_avi_payload(df: DataFrame, id_col: str, text_col: str,
                            codec: str = "DIB ") -> DataFrame:
-    """Source stand-in producing REAL video bytes: a valid AVI per row
-    with md5-derived dims (16–31 px a side, the PNG-stage rule), an
-    md5-derived frame count 2–8, fps 4–11, and digest-striped frame
-    pixels (frame f shifts the stripe by f so frames differ). The
-    variable frame count + non-4-multiple widths exercise the idx1
-    walk and the DIB stride padding. Output is (id, payload)."""
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            clips = []
-            for text in pdf[text_col]:
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                w, h = 16 + digest[0] % 16, 16 + digest[1] % 16
-                nf = 2 + digest[2] % 7
-                fps = 4 + digest[3] % 8
-                n = w * h
-                frames = []
-                for f in range(nf):
-                    stripe = digest[f % 16:] + digest[:f % 16]
-                    frames.append((stripe * (n // 16 + 1))[:n])
-                clips.append((w, h, frames, fps))
-            if codec == "MJPG":
-                # r17: one vectorized entropy pass encodes every frame
-                # of every clip in the Arrow batch (byte-identical to
-                # per-frame encode_jpeg — §4.2 batch-at-once)
-                encs = encode_jpeg_frames_many(
-                    [(w, h, frames) for w, h, frames, _fps in clips])
-                payloads = [
-                    encode_avi(enc, w, h, fps, codec="MJPG")
-                    for (w, h, _frames, fps), enc in zip(clips, encs)
-                ]
-            else:
-                payloads = [encode_avi(frames, w, h, fps)
-                            for w, h, frames, fps in clips]
-            yield pd.DataFrame({
-                "id": pdf[id_col].to_numpy(), "payload": payloads,
-            })
-
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+    """Source stand-in producing REAL video bytes (``avi_payloads``).
+    Output is (id, payload)."""
+    return map_payloads(df, id_col, text_col,
+                        functools.partial(avi_payloads, codec=codec))
 
 
 def avi_decode_meta(payload: bytes) -> dict:

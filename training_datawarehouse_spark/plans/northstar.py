@@ -5,6 +5,7 @@ reference implementation — SURVEY §2.2).
 
 from __future__ import annotations
 
+import functools
 import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -27,6 +28,7 @@ from ..operators import sharding
 from ..operators import similarity as sim
 from ..operators import text as tx
 from ..operators import graph as gr
+from ..operators import multimodal as mm
 from ..operators import nndescent as nnd_op
 from ..operators import video as vd
 from ..operators import wordpiece as wpc
@@ -1705,6 +1707,19 @@ def similarity_ivf(spark: SparkSession, sf_dir: str,
 
 # ------------------------------------------------ multimodal columns
 
+#: stage -> (payload builder, decoder) for ``multimodal_meta``.
+MEDIA_STAGES = {
+    "stub": (mm.stub_payloads, mm.deterministic_fake_decode),
+    "png": (mm.png_payloads, mm.png_decode_meta),
+    "wav": (mm.wav_payloads, mm.wav_decode_meta),
+    "jpeg": (mm.jpeg_payloads, mm.jpeg_decode_meta),
+    "webp": (mm.webp_payloads, mm.webp_decode_meta),
+    "avi": (vd.avi_payloads, vd.avi_decode_meta),
+    "avi_mjpg": (functools.partial(vd.avi_payloads, codec="MJPG"),
+                 vd.avi_mjpeg_meta),
+}
+
+
 def multimodal_meta(spark: SparkSession, sf_dir: str,
                     stages: tuple = ("stub", "png", "wav", "jpeg",
                                      "webp", "avi", "avi_mjpg")) -> DataFrame:
@@ -1742,96 +1757,39 @@ def multimodal_meta(spark: SparkSession, sf_dir: str,
     Dims/rates derive from the same md5 bytes in every stage, so the
     whole six-codec pipeline shares one exact SQL oracle.
 
+    Every requested stage runs inside ONE Arrow crossing per partition
+    (``mm.synthesize_decode_stages``): a stage's payloads are
+    synthesized and decoded in the worker, only the metadata rows come
+    back, and one ``groupBy(stage, format)`` aggregates them all.
+
     ``stages=("stub",)`` is the round-2-equivalent sub-plan (the real
     codecs landed in round 3), timed under the bench "extras" section
     so cross-round numbers stay like-for-like."""
-    from ..operators import multimodal as mm
-
     docs = load_table(spark, sf_dir, "documents")
-    agg = [
+    # Every Python task pays a fixed cost of about 0.25 s of CPU whatever
+    # its row count (measured on 4 cores, pyspark 4.1 / Python 3.11:
+    # mostly pyspark's per-task setup_spark_files ->
+    # importlib.invalidate_caches(), which re-reads pyspark.zip once per
+    # cached zipimporter). At bench scale the codec work is small (all
+    # seven stages over 50 documents: ~0.5 s single-threaded), so
+    # crossings x partitions sets this entry's cost, not rows: hence one
+    # crossing for all stages, and the slim (id, text) rows spread over
+    # HALF the cores so each task carries enough rows to amortize that
+    # fixed cost while the codec work still runs in parallel. The
+    # small-sf parquet is a one-row-group file (1 task); at warehouse
+    # scale the source is already many-partitioned and this repartition
+    # drops out.
+    spread = docs.select("doc_id", "text").repartition(
+        max(spark.sparkContext.defaultParallelism // 2, 4)
+    )
+    meta = mm.synthesize_decode_stages(
+        spread, "doc_id", "text", {st: MEDIA_STAGES[st] for st in stages})
+    return meta.groupBy("stage", "format").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_bytes").alias("total_bytes"),
         F.round(F.avg("width"), 4).alias("avg_width"),
         F.round(F.avg("height"), 4).alias("avg_height"),
-    ]
-    stub = (
-        mm.decode_metadata(mm.attach_binary_payload(docs, "doc_id", "text"))
-        .groupBy("format").agg(*agg)
-        .select(F.lit("stub").alias("stage"), "*")
     )
-    # The codec stages are Python-bound, so their wall-clock is the
-    # scan's task count — and the small-sf parquet is a one-row-group
-    # file (1 task). Spread the slim (id, text) rows before entering
-    # Arrow, but at HALF the cores: each task must carry enough rows to
-    # amortize its Python-worker roundtrip (measured at sf0.1: 16
-    # partitions 0.71 s vs 32 partitions 1.23 s for the PNG stage). At
-    # warehouse scale the source is already many-partitioned and this
-    # repartition drops out.
-    spread = docs.select("doc_id", "text").repartition(
-        max(spark.sparkContext.defaultParallelism // 2, 4)
-    )
-    png = (
-        mm.decode_metadata(
-            mm.synthesize_png_payload(spread, "doc_id", "text"),
-            decode_fn=mm.png_decode_meta,
-        )
-        .groupBy("format").agg(*agg)
-        .select(F.lit("png").alias("stage"), "*")
-    )
-    wav = (
-        mm.decode_metadata(
-            mm.synthesize_wav_payload(spread, "doc_id", "text"),
-            decode_fn=mm.wav_decode_meta,
-        )
-        .groupBy("format").agg(*agg)
-        .select(F.lit("wav").alias("stage"), "*")
-    )
-    jpg = (
-        mm.decode_metadata(
-            mm.synthesize_jpeg_payload(spread, "doc_id", "text"),
-            decode_fn=mm.jpeg_decode_meta,
-        )
-        .groupBy("format").agg(*agg)
-        .select(F.lit("jpeg").alias("stage"), "*")
-    )
-    webp = (
-        mm.decode_metadata(
-            mm.synthesize_webp_payload(spread, "doc_id", "text"),
-            decode_fn=mm.webp_decode_meta,
-        )
-        .groupBy("format").agg(*agg)
-        .select(F.lit("webp").alias("stage"), "*")
-    )
-    avi = (
-        mm.decode_metadata(
-            vd.synthesize_avi_payload(spread, "doc_id", "text"),
-            decode_fn=vd.avi_decode_meta,
-        )
-        .groupBy("format").agg(*agg)
-        .select(F.lit("avi").alias("stage"), "*")
-    )
-    # 'avi_mjpg' (round 11): the parser's '00dc'/MJPG branch under the
-    # driver's eye at CONTAINER-metadata grain — synthesize REAL MJPEG
-    # clips (each frame through the in-tree JPEG encoder), then parse
-    # headers + idx1 WITHOUT decoding any JPEG payload. n_bytes
-    # carries the frame count (entropy-coded chunk lengths are
-    # content-dependent — the lossy pixel bounds stay in pytest);
-    # format carries the parsed stream fourcc.
-    avim = (
-        mm.decode_metadata(
-            vd.synthesize_avi_payload(spread, "doc_id", "text",
-                                      codec="MJPG"),
-            decode_fn=vd.avi_mjpeg_meta,
-        )
-        .groupBy("format").agg(*agg)
-        .select(F.lit("avi_mjpg").alias("stage"), "*")
-    )
-    parts = {"stub": stub, "png": png, "wav": wav, "jpeg": jpg,
-             "webp": webp, "avi": avi, "avi_mjpg": avim}
-    out = None
-    for st in stages:
-        out = parts[st] if out is None else out.unionByName(parts[st])
-    return out
 
 
 # payload = unhex(md5(text)); byte k = hex pair 2k+1..2k+2 of the md5.
